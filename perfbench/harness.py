@@ -13,6 +13,7 @@ import json
 import math
 import os
 import shutil
+import signal
 import threading
 import time
 from contextlib import contextmanager
@@ -130,6 +131,129 @@ def _proc_status_kb(pid, field: str) -> int:
             if line.startswith(field + ":"):
                 return int(line.split()[1])
     return 0
+
+
+def _ppids() -> dict[int, int]:
+    """pid -> parent pid of every process in the process table."""
+    out = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        # the command name may hold spaces or parentheses: split after it
+        out[int(name)] = int(stat.rpartition(")")[2].split()[1])
+    return out
+
+
+def descendants(pid: int) -> list[int]:
+    """Every process below ``pid``: children, their children, and so on."""
+    kids: dict[int, list[int]] = {}
+    for child, parent in _ppids().items():
+        kids.setdefault(parent, []).append(child)
+    out, todo = [], list(kids.get(pid, []))
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo.extend(kids.get(p, []))
+    return out
+
+
+def _running(pid: int) -> bool:
+    """True until every thread of ``pid`` has ended.  A process whose
+    main thread has exited reads as a zombie while its other threads
+    still run (a JVM shutting down does), so a zombie counts as ended
+    only once it is down to one thread."""
+    state, threads = "", 0
+    try:
+        with open(f"/proc/{pid}/status") as fh:
+            for line in fh:
+                if line.startswith("State:"):
+                    state = line.split()[1]
+                elif line.startswith("Threads:"):
+                    threads = int(line.split()[1])
+    except OSError:
+        return False
+    return not (state in ("Z", "X") and threads <= 1)
+
+
+def become_subreaper() -> bool:
+    """Make processes orphaned below this one (a JVM's workers once the
+    JVM is gone) this process's children, so it can wait for them."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        return libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) == 0
+    except (OSError, AttributeError):
+        return False
+
+
+def _reap() -> None:
+    """Collect the exit status of every child that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def end_processes(timeout: float = 30.0) -> list[int]:
+    """End the driver JVM that PySpark launched and every other process
+    below this one (the JVM's Python workers), and wait until each has
+    ended.  ``spark.stop()`` leaves the JVM alive; on its own it ends only
+    after this process exits, on its own time.  Closing the JVM's stdin
+    makes it exit; what is still running after ``timeout`` (a JVM whose
+    gateway never came up) gets SIGTERM, then SIGKILL.  Returns the pids
+    that had to be signalled."""
+    from pyspark import SparkContext
+
+    tree = descendants(os.getpid())
+    gateway = SparkContext._gateway
+    SparkContext._gateway = SparkContext._jvm = None
+    proc = getattr(gateway, "proc", None) if gateway is not None else None
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:  # the JVM may be gone already; it is waited for below
+            pass
+    if proc is not None and proc.stdin is not None:
+        try:
+            proc.stdin.close()
+        except OSError:
+            pass
+
+    def wait(limit: float) -> list[int]:
+        """Wait up to ``limit`` seconds for the tree to end; the rest."""
+        nonlocal tree
+        deadline = time.monotonic() + limit
+        while True:
+            if proc is not None:
+                proc.poll()  # the JVM: let its Popen record the exit itself
+            _reap()
+            tree = sorted(set(tree) | set(descendants(os.getpid())))
+            alive = [p for p in tree if _running(p)]
+            if not alive or time.monotonic() > deadline:
+                return alive
+            time.sleep(0.05)
+
+    stuck = wait(timeout)
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for p in wait(0.0):
+            try:
+                os.kill(p, sig)
+            except OSError:
+                pass
+        if not wait(10.0):
+            break
+    _reap()
+    return stuck
 
 
 def jvm(spark):

@@ -168,6 +168,7 @@ class Run:
 
     def execute(self) -> int:
         host = harness.host_record()
+        harness.become_subreaper()
         self.steal0 = host["cpu_steal_s"]
         os.makedirs(os.path.join(self.work, "spark-local"))
         os.makedirs(os.path.join(self.work, "tmp"))
@@ -191,7 +192,15 @@ class Run:
             traceback.print_exc()
             crashed = True
         finally:
-            self._shutdown()
+            try:
+                self._shutdown()
+            except Exception:  # e.g. the JVM got the same signal and is gone
+                traceback.print_exc()
+                crashed = True
+            killed = harness.end_processes()
+            if killed:
+                self.note(f"signalled {len(killed)} processes still running "
+                          f"after stop: {killed}")
             os.chdir(cwd)
             shutil.rmtree(self.work, ignore_errors=True)
             try:
@@ -203,11 +212,13 @@ class Run:
     def _shutdown(self) -> None:
         """Stop the workload's streams, then the session (idempotent)."""
         wl, self.wl = self.wl, None
-        if wl is not None:
-            wl.close()
         spark, self.spark = self.spark, None
-        if spark is not None:
-            spark.stop()
+        try:
+            if wl is not None:
+                wl.close()
+        finally:
+            if spark is not None:
+                spark.stop()
 
     def _run_workload(self, host: dict) -> None:
         with self.tracer.span("harness.setup") as setup:

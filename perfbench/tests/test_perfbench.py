@@ -13,6 +13,7 @@ import math
 import os
 import re
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -28,20 +29,46 @@ WORKLOADS = ["bulk_replay", "stream_upsert", "changelog_replica"]
 LINE = re.compile(r"^(\S+) = (\S+) (\S+)(?: \(n=(\d+).*\))?$")
 
 
+def _in_session(sid: int) -> list[int]:
+    """Pids of the processes still in session ``sid``."""
+    out = []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                fields = fh.read().rpartition(")")[2].split()
+        except OSError:
+            continue
+        if int(fields[3]) == sid:
+            out.append(int(name))
+    return out
+
+
 def _bench(workload: str, trace: int) -> dict:
-    proc = subprocess.run(
+    # its own session, so whatever it starts can be found after it exits
+    proc = subprocess.Popen(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "3",
          "--seconds", "2", "--trace", str(trace), "--scale", "toy"],
-        cwd=ROOT, capture_output=True, text=True, timeout=400,
+        cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        start_new_session=True,
     )
-    lines = proc.stdout.strip().splitlines()
-    assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-3000:]
+    try:
+        stdout, stderr = proc.communicate(timeout=400)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        raise
+    lines = stdout.strip().splitlines()
+    assert proc.returncode == 0, stdout[-3000:] + stderr[-3000:]
+    # the run stopped every process it started (the JVM, Python workers)
+    assert _in_session(proc.pid) == []
     printed = {}
     for line in lines[:-1]:
         m = LINE.match(line)
         if m:
             printed[m.group(1)] = (float(m.group(2)), m.group(3), m.group(4))
-    return {"result": json.loads(lines[-1]), "printed": printed, "stdout": proc.stdout}
+    return {"result": json.loads(lines[-1]), "printed": printed, "stdout": stdout}
 
 
 @pytest.fixture(scope="module", params=WORKLOADS)

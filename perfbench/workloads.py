@@ -174,8 +174,12 @@ class Workload:
     def final_lookups(self, table) -> None:
         """The lookups after the write phase, checked against the oracle.
         They start from a collected heap, so garbage the writes left is not
-        charged to the reads."""
+        charged to the reads, and after an untimed pass over the same keys:
+        the first pass after the writes runs slower by a varying amount
+        (p50 up to 1.6x the next pass's), which made read_p50_s spread
+        across runs."""
         self.spark.sparkContext._jvm.java.lang.System.gc()
+        self.warm_lookups(table, len(self.lookup_keys))
         self.lookups(table, self.expected["rows"])
 
     def finish_metrics(self, events_per_s: float, freshness: list[float],
