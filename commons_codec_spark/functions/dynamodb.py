@@ -197,8 +197,7 @@ UNIVERSAL_SCHEMA = T.StructType(
 
 def _jsonify(bucket: dict) -> dict:
     # ensure_ascii=False keeps non-ASCII text as UTF-8, byte-identical to
-    # the JVM decoder's Jackson encoding (dynamodb_jvm.py) — pinned by
-    # tests/test_dynamodb_jvm.py.
+    # the JVM's Jackson JSON encoding (``to_json``).
     return {
         k: json.dumps(v, separators=(",", ":"), ensure_ascii=False)
         for k, v in bucket.items()
@@ -246,7 +245,6 @@ def decode_universal(
     all non-decode columns pass through untouched.
     """
     passthrough = [f for f in df.schema.fields if f.name not in ("_decoded",)]
-    out_schema = T.StructType(list(passthrough) + list(UNIVERSAL_SCHEMA.fields))
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

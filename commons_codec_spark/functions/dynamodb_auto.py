@@ -33,8 +33,8 @@ batch actually has.
 
 Contrast measured at 2M depth-1 images, local[32], warm: Arrow universal
 kernel 8.5 s; this path ~1 s inference + a DIRECT-speed decode (the same
-compiled form the replay hot path uses).  Unlike the expression decoder
-in :mod:`.dynamodb_jvm`, nothing here is interpreted per row.
+compiled form the replay hot path uses).  Nothing here is interpreted
+per row.
 """
 
 from __future__ import annotations

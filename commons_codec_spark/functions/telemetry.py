@@ -460,7 +460,7 @@ def decode_tasmota_sensor_jvm(df: DataFrame, payload_col: str = "payload") -> Da
     the Arrow kernel — the nested re-parse (1 + one per object subtree)
     costs ~2× the single json.loads pass.  The kernel stays the default;
     this form is for deployments that must keep executors free of Python
-    worker processes (same rationale as ``dynamodb_jvm``).
+    worker processes.
 
     Exactly the kernel's state space: ``Time`` passes through; each
     top-level object value contributes ``key.dkey`` entries for its

@@ -10,9 +10,11 @@ CDCPipeline` and :class:`~..streaming.fanout.MultiTablePipeline` consume,
 so a Delta/Iceberg-backed implementation drops in without touching the
 decode/fold/merge logic.
 
-Mapping to real table formats (the deliverable where the packages exist —
-this sandbox has no Delta/Iceberg jars, see :mod:`.delta` for the typed
-skeleton):
+Mapping to real table formats (the project does not depend on the
+Delta/Iceberg packages, so the mapping is documented here).  The fold's
+compact net encoding (keys + aa/aseq/pa/pseq/row/prow_extra) is already
+the ideal MERGE source: one row per key, both presence branches
+precomputed, ordering guards as plain column predicates.
 
 ===================  =====================================================
 Seam method          Delta / Iceberg equivalent
@@ -37,6 +39,23 @@ ids`` / ``version``  ``userMetadata``) or a tiny sidecar table.
 schema evolution     ``spark.databricks.delta.schema.autoMerge`` /
                      Iceberg ``UpdateSchema`` — additive, like the lake.
 ===================  =====================================================
+
+Per-method remarks for a Delta implementation (``delta.tables.DeltaTable``):
+
+- ``merge``: join keys null-safe (``t.k <=> s.k``); the UPDATE sets each
+  payload column to ``coalesce(s.prow_extra.c, s.row.c)`` and ``_seq`` to
+  ``s.pseq``; the INSERT takes ``s.row.c`` and ``s.aseq``.  Idempotent
+  writes use ``txnAppId`` = pipeline id and ``txnVersion`` = ``batch_id``,
+  so a replayed micro-batch no-ops, and ``is_applied`` is one comparison
+  against the stored ``txnVersion`` (streaming epoch ids are monotonic).
+  ``touched`` is ignored: Delta prunes files from the MERGE condition's
+  min/max stats.
+- Tombstones: Delta MERGE keeps none, so a source that can reorder a
+  delete past a later insert needs tombstone ROWS (a ``_deleted`` column
+  filtered in ``read``) — the same semantics as the lake's.
+- ``read_changes`` needs ``delta.enableChangeDataFeed=true`` on the table.
+- ``vacuum`` keeps a time window (``VACUUM t RETAIN <hours>``), not a
+  version count.
 
 The pipeline also derives bucket hints via :meth:`bucket_of`; formats
 with their own clustering (Delta OPTIMIZE ZORDER, Iceberg bucket

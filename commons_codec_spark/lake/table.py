@@ -387,16 +387,6 @@ class KeyedLakeTable:
             df = self.spark.createDataFrame(
                 [], T._parse_datatype_string(self._full_schema(payload_schema))
             )
-        elif os.environ.get("SPARK_GRAFT_READ_MERGESCHEMA", "0") == "1":
-            # Legacy inference path (A/B lever): mergeSchema unions the
-            # footers of every file — a distributed planning job per read.
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            for c, t in payload_schema.items():
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast(t))
-            if DELETED_COL not in df.columns:
-                df = df.withColumn(DELETED_COL, F.lit(False))
-            df = df.select(*cols)
         else:
             # The commit IS the schema authority (evolution is additive-only
             # and types are pinned at first write), so read with the exact
@@ -404,8 +394,7 @@ class KeyedLakeTable:
             # O(1) in file count where inference is O(files) — at 100 TB the
             # difference between a metadata op and a cluster job.  Buckets
             # written before an additive evolution simply null-fill the new
-            # columns (by-name parquet resolution), which is exactly what
-            # the mergeSchema path produced.
+            # columns (by-name parquet resolution).
             df = self.spark.read.schema(
                 T._parse_datatype_string(self._full_schema(payload_schema))
             ).parquet(*paths)
@@ -878,12 +867,14 @@ class KeyedLakeTable:
         commits = sorted(
             f for f in os.listdir(self._commit_dir()) if f.endswith(".json")
         )
+        data_dir = os.path.join(self.root, "data")
         live: set[str] = set()
         for name in commits[-keep_last:]:
             with open(os.path.join(self._commit_dir(), name)) as fh:
                 for p in json.load(fh)["buckets"].values():
-                    live.add(p.split("/data/")[1].split("/")[0])
-        data_dir = os.path.join(self.root, "data")
+                    # relative to the table's own data dir: the root path
+                    # may itself contain a "data" component
+                    live.add(os.path.relpath(p, data_dir).split(os.sep)[0])
         for version_dir in os.listdir(data_dir):
             if version_dir not in live:
                 shutil.rmtree(os.path.join(data_dir, version_dir), ignore_errors=True)

@@ -12,8 +12,6 @@ representation-sensitive).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -84,61 +82,26 @@ def _derive_cdc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys_json = F.format_string(
         '{"okey":{"N":"%d"},"lineno":{"N":"%d"}}', F.col("okey"), F.col("lineno")
     )
-    def ev(op, seq, img):
-        return F.struct(
-            F.lit(op).alias("op"), seq.alias("commit_seq"),
-            keys_json.alias("keys_json"), img.alias("image"),
-        )
-
-    if os.environ.get("SPARK_GRAFT_EVENTS_EXPLODE", "0") != "1":
-        # Default: the 3-branch union.  Catalyst has no cross-branch
-        # subtree CSE, so each branch re-runs the lineitem scan + groupBy
-        # — yet measured FASTER here than the single-pass explode form
-        # below (interleaved A/B, min/median: union 3.62/3.89 s vs
-        # explode 4.99/5.13, explode+fan-out 3.90/4.07): with a single-
-        # row-group input the three branches triple scan parallelism on
-        # otherwise-idle cores, while the explode adds a generate over
-        # already-formatted wide strings.  At a scale where the source
-        # scan itself is expensive, flip SPARK_GRAFT_EVENTS_EXPLODE=1 —
-        # one pass instead of three.
-        ins = li.select(
-            F.lit("insert").alias("op"), (rid * 3).alias("commit_seq"),
-            keys_json.alias("keys_json"), image(F.col("qty")).alias("image"),
-        )
-        upd = li.filter(F.col("qty") > 25).select(
-            F.lit("update").alias("op"), (rid * 3 + 1).alias("commit_seq"),
-            keys_json.alias("keys_json"), image(F.col("qty") + 100).alias("image"),
-        )
-        dele = li.filter(F.col("flag") == "R").select(
-            F.lit("delete").alias("op"), (rid * 3 + 2).alias("commit_seq"),
-            keys_json.alias("keys_json"), F.lit(None).cast("string").alias("image"),
-        )
-        return ins.unionAll(upd).unionAll(dele)
-    # Scale lever (off by default — see A/B above): one aggregation, not
-    # three.  Each deduped lineitem row emits its 1-3 events via
-    # array+explode (insert always; update when qty > 25; delete when
-    # flag = 'R') — one pass over the source where the union makes three.
-    # Row set is identical (order is immaterial: the driver hashes
-    # order-insensitively and every downstream consumer folds by seq).
-    return (
-        li.select(
-            F.explode(
-                F.array(
-                    ev("insert", rid * 3, image(F.col("qty"))),
-                    F.when(
-                        F.col("qty") > 25,
-                        ev("update", rid * 3 + 1, image(F.col("qty") + 100)),
-                    ),
-                    F.when(
-                        F.col("flag") == "R",
-                        ev("delete", rid * 3 + 2, F.lit(None).cast("string")),
-                    ),
-                )
-            ).alias("e")
-        )
-        .filter(F.col("e").isNotNull())
-        .select("e.op", "e.commit_seq", "e.keys_json", "e.image")
+    # The 3-branch union.  Catalyst has no cross-branch subtree CSE, so
+    # each branch re-runs the lineitem scan + groupBy — yet measured
+    # faster than a single-pass array+explode form (interleaved A/B,
+    # min/median: union 4.44/4.53 s vs explode 4.99/5.13): with a single-
+    # row-group input the three branches triple scan parallelism on
+    # otherwise-idle cores, while the explode adds a generate over
+    # already-formatted wide strings.
+    ins = li.select(
+        F.lit("insert").alias("op"), (rid * 3).alias("commit_seq"),
+        keys_json.alias("keys_json"), image(F.col("qty")).alias("image"),
     )
+    upd = li.filter(F.col("qty") > 25).select(
+        F.lit("update").alias("op"), (rid * 3 + 1).alias("commit_seq"),
+        keys_json.alias("keys_json"), image(F.col("qty") + 100).alias("image"),
+    )
+    dele = li.filter(F.col("flag") == "R").select(
+        F.lit("delete").alias("op"), (rid * 3 + 2).alias("commit_seq"),
+        keys_json.alias("keys_json"), F.lit(None).cast("string").alias("image"),
+    )
+    return ins.unionAll(upd).unionAll(dele)
 
 
 def q_cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:

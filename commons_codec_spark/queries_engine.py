@@ -8,6 +8,11 @@ query builds a throwaway lake table under a temp dir, drives the pipeline
 and materializes it (``localCheckpoint``) so the temp dir can be removed
 before the driver collects.  The DuckDB oracle states the same final
 state in plain SQL over the shared testdata parquet.
+
+Every workload here declares its complete image schema, so the pipelines
+run with ``discover_columns=False``: per-batch discovery would scan every
+image's JSON keys to find nothing.  Discovery itself stays covered by the
+schema-evolution tests (pipeline + wire).
 """
 
 from __future__ import annotations
@@ -36,21 +41,6 @@ def _t(
     # per query), and each job re-executes the input DAG, so a fan-out
     # shuffle would be re-paid per job for inputs of a few thousand rows.
     return read_table(spark, sf_dir, name, fan_out=fan_out)
-
-
-def _discover() -> bool:
-    """Per-batch schema discovery for the lifecycle queries.
-
-    Discovery scans every image's JSON keys once per batch — a full extra
-    pass over the widest column.  These workloads declare their complete
-    image schema up front, so the scan finds nothing by construction;
-    production pipelines with declared schemas run ``discover_columns=
-    False`` for the same reason (the fan-out and wire queries already
-    do).  Off by default; ``SPARK_GRAFT_LIFECYCLE_DISCOVER=1`` re-enables
-    (A/B lever).  Discovery itself stays exercised by the schema-evolution
-    tests (pipeline + wire) — this toggles cost, not capability.
-    """
-    return os.environ.get("SPARK_GRAFT_LIFECYCLE_DISCOVER", "0") == "1"
 
 
 def _hint() -> bool | str:
@@ -134,7 +124,7 @@ def q_full_load_then_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=_discover(), touched_hint=_hint(),
+        discover_columns=False, touched_hint=_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg)
     pipe.full_load(full, seq=0)
@@ -162,7 +152,7 @@ def q_changelog_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=_discover(), touched_hint=_hint(),
+        discover_columns=False, touched_hint=_hint(),
     )
     pipe = CDCPipeline(spark, src, cfg)
     pipe.full_load(full, seq=0)
@@ -235,7 +225,7 @@ def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=_discover(), touched_hint=_hint(),
+        discover_columns=False, touched_hint=_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg, checkpoint_dir=f"{work}/ckpt")
     pipe.full_load(full, seq=0)
@@ -296,7 +286,7 @@ def q_control_drop_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["sk"], image_columns={"sk": "N", "name": "S"},
-        handle_control=True, discover_columns=_discover(),
+        handle_control=True, discover_columns=False,
         touched_hint=_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg)

@@ -56,12 +56,9 @@ def ensure_parallel(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
     """Fan a DataFrame out to one core wave when its planned partition
     count is lower (e.g. a single-row-group scan, or a union of small
     scans fanned once instead of per branch).  ``key`` memoizes the
-    planned count per session.  SPARK_GRAFT_SCAN_FANOUT: "0" disables,
-    an integer pins the target; default = one core wave."""
-    knob = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "")
-    if knob == "0":
-        return df
-    target = int(knob) if knob.isdigit() else core_wave(spark)
+    planned count per session.  Callers that must not fan out skip this
+    call (``read_table(..., fan_out=False)``)."""
+    target = core_wave(spark)
     memo_key = (spark.sparkContext.applicationId, key)
     n = _SCAN_PARTS.get(memo_key)
     if n is None:

@@ -613,15 +613,11 @@ class CDCPipeline:
         # outright (a full load is the largest batch a pipeline ever sees).
         # Extra hinted buckets are rewritten byte-identical (merge's
         # documented superset contract); a bucket with no rows at all
-        # writes nothing and stays absent.  SPARK_GRAFT_FULLLOAD_HINT=0
-        # restores the discovery path (A/B lever).
+        # writes nothing and stays absent.  A sink without buckets
+        # discovers what it touched.
         n_buckets = getattr(self.table, "n_buckets", None)
-        if n_buckets and os.environ.get("SPARK_GRAFT_FULLLOAD_HINT", "1") != "0":
-            m = self.table.merge(
-                net, batch_id=None, touched=list(range(n_buckets))
-            )
-        else:
-            m = self.table.merge(net, batch_id=None)
+        touched = list(range(n_buckets)) if n_buckets else None
+        m = self.table.merge(net, batch_id=None, touched=touched)
         self.metrics.append({"full_load": True, **m})
         return m
 

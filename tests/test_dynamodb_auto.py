@@ -10,6 +10,7 @@ nesting, scalar+NULL nullability, and a Python-free physical plan.
 from __future__ import annotations
 
 import json
+import random
 
 import pyspark.sql.functions as F
 
@@ -19,6 +20,37 @@ from commons_codec_spark.functions.dynamodb_auto import (
     decode_inferred,
     infer_image_schema,
 )
+
+
+def _rand_descriptor(rng: random.Random, depth: int):
+    markers = ["S", "N", "BOOL", "NULL", "B", "SS", "NS", "BS"]
+    if depth > 0:
+        markers += ["M", "L", "M", "L"]
+    m = rng.choice(markers)
+    if m == "S":
+        return {"S": rng.choice(["", "plain", 'q"uote', "uni·é", "a\nb", "x" * 40])}
+    if m == "N":
+        return {"N": rng.choice(["0", "-7", "123456789", "84.84", "1e3", "0.25"])}
+    if m == "BOOL":
+        return {"BOOL": rng.random() < 0.5}
+    if m == "NULL":
+        return {"NULL": True}
+    if m == "B":
+        return {"B": "U3Vubnk="}
+    if m == "SS":
+        return {"SS": rng.sample(["a", "b", "c", "dd", "é"], rng.randint(1, 4))}
+    if m == "NS":
+        return {"NS": rng.sample([1, 2.5, -3, 400, 0.125], rng.randint(1, 4))}
+    if m == "BS":
+        return {"BS": rng.sample(["YQ==", "Yg==", "Yw=="], rng.randint(1, 3))}
+    if m == "M":
+        return {
+            "M": {
+                f"f{j}": _rand_descriptor(rng, depth - 1)
+                for j in range(rng.randint(0, 3))
+            }
+        }
+    return {"L": [_rand_descriptor(rng, depth - 1) for _ in range(rng.randint(0, 3))]}
 
 
 def _df(spark, images):
@@ -245,10 +277,7 @@ def test_random_corpus_agreement_with_kernel(spark):
     """Seeded random images (nested M/L, sets, conflicts impossible here
     since every doc shares the generator): decode_auto's typed output
     must agree value-for-value with the reference kernel's decode."""
-    import random
-
     from commons_codec_spark.functions.dynamodb import decode_record
-    from test_dynamodb_jvm import _rand_descriptor
 
     rng = random.Random(23)
     images = []

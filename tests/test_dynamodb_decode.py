@@ -177,3 +177,28 @@ def test_compile_direct_decoder_jvm(spark):
     # the plan must be pure JVM: no Python eval nodes
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_sets_sorted_and_floats_formatted(spark):
+    """Direct value pins on the Arrow universal decoder: sorted sets,
+    N->float with Python-repr formatting of integral doubles."""
+    df = spark.createDataFrame(
+        [
+            (
+                "insert",
+                json.dumps({"id": {"S": "k1"}}),
+                json.dumps(
+                    {
+                        "id": {"S": "k1"},
+                        "ns": {"NS": ["3", "1", "2.5"]},
+                        "big": {"N": "123456789"},
+                    }
+                ),
+            )
+        ],
+        "op string, keys_json string, image string",
+    )
+    row = ddb.decode_universal(df).collect()[0]
+    assert row["typed"]["ns"] == "[1.0,2.5,3.0]"
+    # Python float repr, not the Java-style 1.23456789E8
+    assert row["typed"]["big"] == "123456789.0"

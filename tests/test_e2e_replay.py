@@ -409,11 +409,13 @@ def test_auto_salt_engages_under_skew_only(spark, tmp_path):
     _assert_state_matches(table2, _oracle_state(uni_log.collect()))
 
 
-def test_full_load_hint_matches_discovery_path(spark, tmp_path, monkeypatch):
-    """The all-buckets full-load merge hint is a pure optimization: final
-    state identical to the exact-discovery path, the hint engages every
-    bucket (metrics), and buckets that receive no rows stay absent (the
-    superset contract's "extra hinted buckets write nothing" edge)."""
+def test_full_load_hint_matches_discovery_path(spark, tmp_path):
+    """The all-buckets full-load merge hint is a pure optimization: the
+    final state is the one exact discovery would find, the hint engages
+    every bucket (metrics), and buckets that receive no rows stay absent
+    (the superset contract's "extra hinted buckets write nothing" edge).
+    ``test_empty_touched_hint_falls_back_to_discovery`` covers merge's
+    discovery path itself."""
     def img(path):
         return (
             f'{{"repo":{{"S":"r"}},"path":{{"S":"{path}"}},'
@@ -423,36 +425,30 @@ def test_full_load_hint_matches_discovery_path(spark, tmp_path, monkeypatch):
     # one key only: with n_buckets=4 the hint names 4 buckets, rows land
     # in exactly one — the other three must not materialize as dirs
     snapshot = spark.createDataFrame([(img("solo"),)], "image string")
-
-    def load(hint_env):
-        monkeypatch.setenv("SPARK_GRAFT_FULLLOAD_HINT", hint_env)
-        root = tmp_path / f"tbl-{hint_env}"
-        table = KeyedLakeTable.create(
-            spark, str(root),
-            key_schema={"repo": "string", "path": "string"}, n_buckets=4,
-        )
-        cfg = PipelineConfig(
-            keys=KEYS, image_columns=SOURCE_CODE_COLUMNS,
-            discover_columns=False,
-        )
-        pipe = CDCPipeline(spark, table, cfg)
-        m = pipe.full_load(snapshot, seq=0)
-        pipe.full_load(snapshot, seq=0)  # idempotent under either path
-        return table, m
-
-    hinted_table, hinted_m = load("1")
-    exact_table, exact_m = load("0")
-
-    # the hint names every bucket; exact discovery finds just the one
-    assert hinted_m["touched_buckets"] == 4
-    assert exact_m["touched_buckets"] == 1
-    # un-hit hinted buckets never materialize (commit lists one bucket)
-    assert len(hinted_table._current_commit()["buckets"]) == 1
-    # states identical
-    rows = lambda t: sorted(  # noqa: E731
-        (r.repo, r.path, r.commit, r.content) for r in t.read().collect()
+    table = KeyedLakeTable.create(
+        spark, str(tmp_path / "tbl"),
+        key_schema={"repo": "string", "path": "string"}, n_buckets=4,
     )
-    assert rows(hinted_table) == rows(exact_table) == [("r", "solo", "c0", "v")]
+    cfg = PipelineConfig(
+        keys=KEYS, image_columns=SOURCE_CODE_COLUMNS, discover_columns=False,
+    )
+    pipe = CDCPipeline(spark, table, cfg)
+
+    def rows():
+        return sorted(
+            (r.repo, r.path, r.commit, r.content) for r in table.read().collect()
+        )
+
+    m = pipe.full_load(snapshot, seq=0)
+    # the hint names every bucket
+    assert m["touched_buckets"] == 4
+    # un-hit hinted buckets never materialize (commit lists one bucket)
+    assert len(table._current_commit()["buckets"]) == 1
+    assert rows() == [("r", "solo", "c0", "v")]
+
+    pipe.full_load(snapshot, seq=0)  # idempotent re-load
+    assert len(table._current_commit()["buckets"]) == 1
+    assert rows() == [("r", "solo", "c0", "v")]
 
 
 def test_all_hint_mode_matches_prescan_path(spark, tmp_path, small_log, oracle_state):

@@ -12,10 +12,10 @@ from commons_codec_spark.lake.table import KeyedLakeTable
 from commons_codec_spark.streaming.pipeline import CDCPipeline, PipelineConfig
 
 
-def _table(spark, tmp_path, n_buckets=8):
+def _table(spark, tmp_path, n_buckets=8, name="tbl"):
     return KeyedLakeTable.create(
         spark,
-        str(tmp_path / "tbl"),
+        str(tmp_path / name),
         key_schema={"k": "string"},
         n_buckets=n_buckets,
     )
@@ -146,25 +146,21 @@ def test_keyed_lake_table_satisfies_sink_seam(spark, tmp_path):
     assert list(merge_sig.parameters)[:4] == ["self", "net", "batch_id", "touched"]
 
 
-def test_delta_skeleton_is_import_gated():
-    """Without delta-spark the Delta sink raises a clear ImportError at
-    construction (the mapping itself is the deliverable here)."""
-    import pytest
-
-    from commons_codec_spark.lake.delta import DeltaLakeTable
-
-    with pytest.raises(ImportError, match="delta-spark"):
-        DeltaLakeTable(None, "/tmp/x", keys=["k"])
-
-
 def test_vacuum_retires_old_commits_and_keeps_bookkeeping(spark, tmp_path):
     """vacuum(keep_last=N) bounds the METADATA too: commit files older
     than the last N are retired (the head lookup stays O(N) over the
     stream's life), while everything cumulative — state, applied batch
-    ids, idempotence — survives, and merges continue normally after."""
+    ids, idempotence — survives, and merges continue normally after.
+    A root whose own path contains a ``data`` dir must keep its live
+    version dirs too."""
+    for name in ("tbl", "data/tbl"):
+        _check_vacuum(spark, tmp_path, name)
+
+
+def _check_vacuum(spark, tmp_path, name):
     import os
 
-    table = _table(spark, tmp_path)
+    table = _table(spark, tmp_path, name=name)
     for i in range(5):
         table.merge(_net(spark, [(f"k{i}", i, i)]), batch_id=i)  # v1..v5
     assert table.version() == 5
