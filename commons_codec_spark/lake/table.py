@@ -48,6 +48,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from commons_codec_spark.operators.cdc_fold import DELETE, KEEP, SET
+from commons_codec_spark.session import core_wave
 
 SEQ_COL = "_seq"
 BUCKET_COL = "__bucket"
@@ -421,6 +422,10 @@ class KeyedLakeTable:
         the folded batch.  A superset is safe (extra buckets are rewritten
         byte-identical); when omitted, ``net`` is materialized here to avoid
         computing the fold twice.
+
+        The write runs one core wave of tasks, not one task per touched
+        bucket (:meth:`_write_buckets`); each bucket dir still gets exactly
+        one file.
         """
         commit = self._current_commit()
         if batch_id is not None and _bid_contains(
@@ -521,27 +526,29 @@ class KeyedLakeTable:
         version = commit["version"] + 1
         out_dir = os.path.join(self.root, "data", f"v{version:012d}")
         rows_written = None
+        written: set[int] = set()
         if touched:
             from pyspark.sql import Observation
 
+            # above the join, so it is delivered inside foreachBatch too
             obs = Observation(f"merge-v{version}")
-            (
-                result.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-                .repartition(len(touched), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
+            self._write_buckets(
+                result.observe(obs, F.count(F.lit(1)).alias("rows_written")),
+                len(touched),
+                out_dir,
             )
-            try:
-                rows_written = int(obs.get.get("rows_written") or 0)
-            except Exception:  # noqa: BLE001
-                rows_written = None
-        if hinted and touched:
             written = {
                 int(d.split("=", 1)[1])
                 for d in os.listdir(out_dir)
                 if d.startswith(f"{BUCKET_COL}=")
             }
+            # An empty result writes no bucket dir, and AQE drops the
+            # Observation together with a plan it finds empty at run time
+            # (no metrics row is ever delivered): the files are the count.
+            # Rows written means the Observation ran; a missing row then
+            # raises instead of reading as a lost metric.
+            rows_written = int(obs.get["rows_written"]) if written else 0
+        if hinted and touched:
             extra = written - set(touched)
             if extra:
                 # raise BEFORE committing: the orphan data dir is vacuumed,
@@ -583,6 +590,23 @@ class KeyedLakeTable:
             "rows_written": rows_written,
             "skipped": False,
         }
+
+    def _write_buckets(self, df: DataFrame, n_buckets: int, out_dir: str) -> None:
+        """Write ``df`` as one ``__bucket=NN`` dir per bucket under ``out_dir``.
+
+        One core wave of tasks, at most one per bucket: hash partitioning on
+        the bucket column sends each bucket to exactly one task, so each
+        bucket dir holds exactly one parquet file however many buckets a
+        task writes.  One task per bucket instead paid per-task launch and
+        commit overhead dozens of times on a small micro-batch; a single
+        task serialized the whole write.
+        """
+        (
+            df.repartition(min(n_buckets, core_wave(self.spark)), F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(out_dir)
+        )
 
     # ------------------------------------------------------------------ CDF
 
@@ -759,18 +783,13 @@ class KeyedLakeTable:
         version = commit["version"] + 1
         self._clear_staged_changes(version)
         out_dir = os.path.join(self.root, "data", f"v{version:012d}")
-        (
-            self.read(include_tombstones=True)
-            .withColumn(
+        self._write_buckets(
+            self.read(include_tombstones=True).withColumn(
                 BUCKET_COL,
-                F.pmod(
-                    F.xxhash64(*[F.col(k) for k in self.keys]), n_buckets
-                ),
-            )
-            .repartition(n_buckets, F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
+                F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), n_buckets),
+            ),
+            n_buckets,
+            out_dir,
         )
         buckets = {
             d.split("=", 1)[1]: os.path.join(out_dir, d)
@@ -830,12 +849,7 @@ class KeyedLakeTable:
             .withColumn(BUCKET_COL, self._bucket_expr())
             .filter(~stale)
         )
-        (
-            kept.repartition(len(hit), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
+        self._write_buckets(kept, len(hit), out_dir)
         buckets = dict(commit["buckets"])
         for b in hit:
             bpath = os.path.join(out_dir, f"{BUCKET_COL}={b}")

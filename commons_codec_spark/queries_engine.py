@@ -29,7 +29,7 @@ from commons_codec_spark.functions.telemetry import decode_telemetry
 from commons_codec_spark.lake.table import KeyedLakeTable
 from commons_codec_spark.streaming.pipeline import CDCPipeline, PipelineConfig
 from commons_codec_spark.readers import read_table
-from commons_codec_spark.tuning import workdir
+from commons_codec_spark.tuning import lifecycle_touched_hint, workdir
 
 
 def _t(
@@ -41,22 +41,6 @@ def _t(
     # per query), and each job re-executes the input DAG, so a fan-out
     # shuffle would be re-paid per job for inputs of a few thousand rows.
     return read_table(spark, sf_dir, name, fan_out=fan_out)
-
-
-def _hint() -> bool | str:
-    """Touched-bucket hint mode for the lifecycle queries' CDC batches.
-
-    These workloads batch thousands of well-mixed keys into 8-bucket
-    tables, so every batch touches every bucket by construction and the
-    keys-only prescan is a whole extra job per batch just to learn "all
-    of them" — ``touched_hint="all"`` makes the merge the batch's ONE job
-    (see PipelineConfig).  ``SPARK_GRAFT_STREAM_HINT_ALL=0`` restores the
-    exact prescan (A/B lever).  Production pipelines with large bucket
-    counts and small batches keep the default exact prescan.
-    """
-    if os.environ.get("SPARK_GRAFT_STREAM_HINT_ALL", "1") == "0":
-        return True
-    return "all"
 
 
 def _materialized(df: DataFrame, work: str) -> DataFrame:
@@ -124,7 +108,7 @@ def q_full_load_then_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=False, touched_hint=_hint(),
+        discover_columns=False, touched_hint=lifecycle_touched_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg)
     pipe.full_load(full, seq=0)
@@ -152,7 +136,7 @@ def q_changelog_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=False, touched_hint=_hint(),
+        discover_columns=False, touched_hint=lifecycle_touched_hint(),
     )
     pipe = CDCPipeline(spark, src, cfg)
     pipe.full_load(full, seq=0)
@@ -225,7 +209,7 @@ def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["cid"], image_columns=_FL_IMG_COLUMNS,
-        discover_columns=False, touched_hint=_hint(),
+        discover_columns=False, touched_hint=lifecycle_touched_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg, checkpoint_dir=f"{work}/ckpt")
     pipe.full_load(full, seq=0)
@@ -287,7 +271,7 @@ def q_control_drop_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = PipelineConfig(
         keys=["sk"], image_columns={"sk": "N", "name": "S"},
         handle_control=True, discover_columns=False,
-        touched_hint=_hint(),
+        touched_hint=lifecycle_touched_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg)
     pipe.apply_batch(batch, batch_id=1)
@@ -524,7 +508,8 @@ def _fanout_workload(spark: SparkSession, sf_dir: str, work: str):
                 spark, f"{work}/{name}", key_schema={key: "double"}, n_buckets=8
             ),
             PipelineConfig(keys=[key], image_columns=img,
-                           discover_columns=False, touched_hint=_hint()),
+                           discover_columns=False,
+                           touched_hint=lifecycle_touched_hint()),
         )
 
     targets = {

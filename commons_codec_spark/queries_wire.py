@@ -26,9 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from commons_codec_spark.lake.table import KeyedLakeTable
-from commons_codec_spark.queries_engine import _hint
 from commons_codec_spark.streaming.pipeline import CDCPipeline, PipelineConfig
-from commons_codec_spark.tuning import workdir
+from commons_codec_spark.tuning import lifecycle_touched_hint, workdir
 from commons_codec_spark.tuning import shuffle_partitions as _shuffle_partitions
 
 
@@ -88,7 +87,7 @@ def q_kafka_wire_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(
         keys=["uid"], image_columns=SIM_IMAGE_COLUMNS, discover_columns=False,
-        touched_hint=_hint(),
+        touched_hint=lifecycle_touched_hint(),
     )
     pipe = CDCPipeline(spark, table, cfg, checkpoint_dir=f"{work}/ckpt")
     with _shuffle_partitions(spark, 8):
@@ -139,7 +138,8 @@ def q_kafka_fanout_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_buckets=8,
             ),
             PipelineConfig(keys=["uid"], image_columns=SIM_IMAGE_COLUMNS,
-                           discover_columns=False, touched_hint=_hint()),
+                           discover_columns=False,
+                           touched_hint=lifecycle_touched_hint()),
         )
 
     targets = {

@@ -20,36 +20,14 @@ row order before hashing.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from commons_codec_spark.session import core_wave
 
 #: (applicationId, path) -> planned scan partition count.  Partition counts
 #: are physical-plan facts (config, not data), so memoizing them avoids
 #: re-planning the same scan on every timed invocation.
 _SCAN_PARTS: dict = {}
-
-
-def core_wave(spark: SparkSession) -> int:
-    """One wave of tasks = the session's core count.
-
-    ``defaultParallelism`` follows ``spark.default.parallelism``, which our
-    session sets to 3× cores for SHUFFLE sizing; the scan fan-out wants one
-    wave, not three — more partitions only multiply per-task overhead for
-    a map-only stage that is already load-balanced by round-robin.  On a
-    non-local master, ``defaultParallelism`` IS the cluster's total core
-    count (the one-wave answer).
-    """
-    master = spark.sparkContext.master or ""
-    if master.startswith("local["):
-        n = master[len("local["):-1]
-        if n == "*":
-            return os.cpu_count() or spark.sparkContext.defaultParallelism
-        try:
-            return max(int(n), 1)
-        except ValueError:
-            pass
-    return spark.sparkContext.defaultParallelism
 
 
 def ensure_parallel(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:

@@ -18,6 +18,31 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def core_wave(spark: SparkSession) -> int:
+    """One wave of tasks = the session's core count.
+
+    ``defaultParallelism`` follows ``spark.default.parallelism``, which
+    :func:`get_spark` sets to 3× cores for SHUFFLE sizing.  A stage whose
+    tasks are already balanced wants one wave, not three: more tasks only
+    multiply per-task overhead.  Two callers size stages this way: the
+    contract queries' scan fan-out (``readers.ensure_parallel``) and the
+    lake's bucket writes, which hash several bucket dirs into each task
+    (``KeyedLakeTable._write_buckets``).  On a non-local master,
+    ``defaultParallelism`` IS the cluster's total core count (the one-wave
+    answer).
+    """
+    master = spark.sparkContext.master or ""
+    if master.startswith("local["):
+        n = master[len("local["):-1]
+        if n == "*":
+            return os.cpu_count() or spark.sparkContext.defaultParallelism
+        try:
+            return max(int(n), 1)
+        except ValueError:
+            pass
+    return spark.sparkContext.defaultParallelism
+
+
 def get_spark(
     app_name: str = "commons-codec-spark",
     cpus: int | None = None,

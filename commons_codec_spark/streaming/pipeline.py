@@ -15,9 +15,12 @@ same batch_id; the sink's ``merge`` refuses to re-apply an applied
 batch_id, so replay is a no-op (the ON-CONFLICT-DO-NOTHING analog at batch
 granularity — reference motivation ``/root/reference/CHANGES.md:20-24``).
 
-Schema evolution: before decoding, each batch's image keys are scanned
-JVM-side (``json_object_keys``) and new columns are registered + added to
-the decode schema; the lake widens on merge (north rule's ``lang`` case).
+Schema evolution: before decoding, each batch's image key names are
+collected JVM-side (``json_object_keys``) in the same one-row aggregation
+as the keys-only prescan (touched buckets, lineage counts), so discovery
+costs no pass of its own; new columns are registered + added to the decode
+schema, and the lake widens on merge (north rule's ``lang`` case).  Paths
+without a prescan run that aggregation with the key names alone.
 """
 
 from __future__ import annotations
@@ -29,12 +32,18 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from commons_codec_spark.functions.dynamodb import compile_direct_decoder
 from commons_codec_spark.lake.interface import LakeSink
 from commons_codec_spark.operators.cdc_fold import fold_net_changes
 from commons_codec_spark.registry import SchemaRegistry
+
+
+def _key_names(names: Column) -> Column:
+    """Aggregate: the distinct names across a group's name arrays
+    (``json_object_keys(image)`` per row, or per-key name sets)."""
+    return F.array_distinct(F.flatten(F.collect_set(names)))
 
 
 @dataclass
@@ -100,7 +109,9 @@ class PipelineConfig:
     #: Spark DDL schema per re-parsed column (default ``map<string,string>``).
     json_schemas: dict[str, str] | None = None
     #: Derive the merge's touched-bucket hint from a keys-only pre-scan so
-    #: the decode→fold→join→write chain runs as one lazy job.  False falls
+    #: the decode→fold→join→write chain runs as one lazy job.  The same
+    #: one-row aggregation returns the lineage counts and, with
+    #: ``discover_columns``, the image key names discovery needs.  False falls
     #: back to materializing the (compact) fold output and discovering the
     #: buckets from it — cheaper when batches are small or keys_json is
     #: expensive to re-scan.  ``"all"`` skips the pre-scan outright and
@@ -114,6 +125,10 @@ class PipelineConfig:
     #: the per-batch lineage metrics (events/op histogram read 0 — they
     #: rode on the pre-scan) and is incompatible with ``salt_chunks=
     #: "auto"`` (skew is measured by the same pre-scan; config error).
+    #: Without the pre-scan, ``discover_columns`` runs its key-name
+    #: aggregation alone.  Batches carrying control events take the exact
+    #: pre-scan in every segment whatever this says, so an empty pre-DDL
+    #: segment commits no schema.
     #: Large tables (thousands of buckets) with small batches should keep
     #: the exact pre-scan — the hint trades a metadata-sized scan for
     #: rewriting every bucket, which only pays when batches touch most
@@ -177,23 +192,27 @@ class CDCPipeline:
 
     # ------------------------------------------------------------ evolution
 
-    def _discover_columns(self, batch: DataFrame) -> None:
-        """Detect new image columns (JVM-side) and widen the decode schema.
+    def _discover_columns(
+        self, batch: DataFrame, image_keys: list[str] | None = None
+    ) -> None:
+        """Register the batch's new image columns and widen the decode schema.
 
-        One distinct over ``json_object_keys(image)`` — no Python, and the
-        distinct set is tiny (column names).  New columns' descriptor
-        markers are sniffed from one sample value.
+        ``image_keys`` is the batch's set of image key names, as the
+        keys-only prescan's one-row aggregation returns it (column
+        ``image_keys``, see :func:`_key_names`) — discovery rides on that
+        pass instead of scanning the batch again.  Where no prescan runs
+        (``touched_hint`` ``"all"``/False, a doomed control segment) the
+        same aggregation runs alone.  A new column's descriptor marker is
+        sniffed from one sample value (one small job per new name, only in
+        the batch where the name first appears).
         """
         if not self.cfg.discover_columns:
             return
-        observed = [
-            r[0]
-            for r in batch.filter(F.col("image").isNotNull())
-            .select(F.explode(F.json_object_keys("image")).alias("k"))
-            .distinct()
-            .collect()
-        ]
-        fresh = [c for c in observed if c not in self._image_columns]
+        if image_keys is None:
+            image_keys = batch.agg(
+                _key_names(F.json_object_keys("image")).alias("image_keys")
+            ).first()["image_keys"]
+        fresh = [c for c in image_keys if c not in self._image_columns]
         if not fresh:
             return
         for col in fresh:
@@ -306,11 +325,11 @@ class CDCPipeline:
                         if self.cfg.decoder is None:
                             self._discover_columns(seg)
                     else:
-                        self._apply_data_batch(seg, batch_id=None)
+                        self._apply_data_batch(seg, batch_id=None, exact=True)
                     self._apply_control(c)
                     lo = hi
                 tail = data.filter(seq >= lo)
-                out.update(self._apply_data_batch(tail, batch_id=batch_id))
+                out.update(self._apply_data_batch(tail, batch_id=batch_id, exact=True))
                 if skipped_segments:
                     out["skipped_doomed_segments"] = skipped_segments
                 out["wall_sec"] = round(time.time() - t0, 3)
@@ -332,7 +351,15 @@ class CDCPipeline:
         self._emit_metrics(m)
         return m
 
-    def _apply_data_batch(self, batch: DataFrame, batch_id) -> dict:
+    def _apply_data_batch(self, batch: DataFrame, batch_id, exact: bool = False) -> dict:
+        """Decode → fold → merge one data batch (or one control segment).
+
+        ``exact`` takes the exact keys-only prescan whatever
+        ``touched_hint`` says.  Control segments need it: under ``"all"``
+        an empty pre-DDL segment would merge with every bucket hinted and
+        bake its pre-DDL decode types into the commit; with the exact hint
+        it merges ``touched=[]`` and bakes nothing.
+        """
         if self.cfg.decoder is not None:
             decoded = self.cfg.decoder(batch)
             # schema-inferring decoders (make_auto_decoder) surface the
@@ -347,8 +374,62 @@ class CDCPipeline:
                     self.registry.note_columns(
                         self.cfg.schema_name, self.cfg.table_name, fresh
                     )
-        else:
-            self._discover_columns(batch)
+
+        # Touched-bucket hint + lineage metrics + column discovery in ONE
+        # tiny aggregation over a keys-only scan of `keys_json` (parquet
+        # reads one small column, plus `image` for discovery; no
+        # window/fold).  It runs before the decode is planned: it needs
+        # only the key columns, which discovery never adds.  With the
+        # hint, `net` stays LAZY and the whole decode→fold→join→write
+        # chain executes as ONE job (no persist barrier; the join reuses
+        # the fold's partitioning).  keys_json is authoritative on every
+        # DynamoDB-stream event (the `Keys` field); a malformed envelope
+        # whose image keys disagree fails loudly in merge's hint check
+        # rather than dropping rows.
+        #
+        # Metrics ride on this pass rather than an Observation on `decoded`:
+        # a CollectMetrics node below the merge join never delivers inside a
+        # foreachBatch micro-batch (Observation.get deadlocks), while an
+        # explicit one-row agg works everywhere.
+        touched = None
+        observed: dict = {}
+        image_keys = None  # None: no prescan carried discovery
+        salt = self.cfg.salt_chunks
+        auto_salt = salt == "auto"
+        hot_keys: list[tuple] | None = None
+        if auto_salt:
+            salt = None  # resolved below when the prescan can measure skew
+        t_hint = time.time()
+        all_hint_buckets = (
+            getattr(self.table, "n_buckets", None)
+            if self.cfg.touched_hint == "all" and not exact
+            else None
+        )
+        if all_hint_buckets:
+            # "all" mode: no prescan job at all — the merge is the batch's
+            # ONE job.  Lineage metrics rode on the prescan, so they read 0
+            # here (documented on the config); correctness is carried by the
+            # merge's superset-hint contract, exactly as in full_load.
+            touched = list(range(all_hint_buckets))
+        elif self.cfg.decoder is None and (exact or self.cfg.touched_hint):
+            row = self._prescan(batch, auto_salt)
+            if auto_salt:
+                salt = self._resolve_auto_salt(
+                    int(row["events"] or 0), int(row["max_key_events"] or 0)
+                )
+                hot_keys = [
+                    tuple(r[k] for k in self.cfg.keys) for r in row["hot_keys"]
+                ] if salt else None
+            touched = sorted(b for b in row["buckets"] if b is not None)
+            observed = {
+                k: int(row[k] or 0)
+                for k in ("events", "dlq_rows", "op_insert", "op_update", "op_delete")
+            }
+            if self.cfg.discover_columns:
+                image_keys = row["image_keys"]
+
+        if self.cfg.decoder is None:
+            self._discover_columns(batch, image_keys)
             # decode (JVM): image JSON -> typed cols; deletes decode keys_json
             src = batch.withColumn(
                 "image", F.coalesce(F.col("image"), F.col("keys_json"))
@@ -369,7 +450,7 @@ class CDCPipeline:
 
         # DLQ: events whose key fields failed to decode are filtered out
         # (written to dlq_dir when configured) and counted in the lineage
-        # metrics below.
+        # metrics.
         key_ok = None
         for k in self.cfg.keys:
             cond = F.col(k).isNotNull()
@@ -377,110 +458,13 @@ class CDCPipeline:
         if self.cfg.dlq_dir:
             decoded.filter(~key_ok).write.mode("append").parquet(self.cfg.dlq_dir)
 
-        # Touched-bucket hint + lineage metrics in ONE tiny aggregation over
-        # a keys-only scan of `keys_json` (parquet reads one small column;
-        # no window/fold).  With the hint, `net` stays LAZY and the whole
-        # decode→fold→join→write chain executes as ONE job (no persist
-        # barrier; the join reuses the fold's partitioning).  keys_json is
-        # authoritative on every DynamoDB-stream event (the `Keys` field);
-        # a malformed envelope whose image keys disagree fails loudly in
-        # merge's hint check rather than dropping rows.
-        #
-        # Metrics ride on this pass rather than an Observation on `decoded`:
-        # a CollectMetrics node below the merge join never delivers inside a
-        # foreachBatch micro-batch (Observation.get deadlocks), while an
-        # explicit one-row agg works everywhere.
-        touched = None
-        observed: dict = {}
-        op = F.col("op")
-        salt = self.cfg.salt_chunks
-        auto_salt = salt == "auto"
-        hot_keys: list[tuple] | None = None
-        if auto_salt:
-            salt = None  # resolved below when the prescan can measure skew
-        t_hint = time.time()
-        all_hint_buckets = (
-            getattr(self.table, "n_buckets", None)
-            if self.cfg.touched_hint == "all"
-            else None
-        )
-        if all_hint_buckets:
-            # "all" mode: no prescan job at all — the merge is the batch's
-            # ONE job.  Lineage metrics rode on the prescan, so they read 0
-            # here (documented on the config); correctness is carried by the
-            # merge's superset-hint contract, exactly as in full_load.
-            touched = list(range(all_hint_buckets))
-        elif self.cfg.decoder is None and self.cfg.touched_hint:
-            key_cols = {k: self._image_columns[k] for k in self.cfg.keys}
-            kd = compile_direct_decoder(
-                batch.select("op", "keys_json"), "keys_json", key_cols
-            )
-            kd_ok = None
-            for k in self.cfg.keys:
-                cond = F.col(k).isNotNull()
-                kd_ok = cond if kd_ok is None else (kd_ok & cond)
-            bucket = self.table.bucket_of(*[F.col(k) for k in self.cfg.keys])
-            if auto_salt:
-                # two-level form of the same aggregation: the per-key stage
-                # shuffles one narrow (keys, counts) row per distinct key
-                # (map-side combined), and the global stage adds max(count)
-                # — the skew measurement the auto decision needs.  kd_ok /
-                # bucket depend only on key columns, so they evaluate on
-                # the per-key rows.
-                per_key = kd.groupBy(*self.cfg.keys).agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    F.count(F.when(op == "insert", F.lit(1))).alias("__ins"),
-                    F.count(F.when(op == "update", F.lit(1))).alias("__upd"),
-                    F.count(F.when(op == "delete", F.lit(1))).alias("__del"),
-                )
-                hot_struct = F.when(
-                    kd_ok & (F.col("__n") > int(self.cfg.auto_salt_floor)),
-                    F.struct(
-                        F.col("__n").alias("n"),
-                        *[F.col(k) for k in self.cfg.keys],
-                    ),
-                )
-                row = per_key.agg(
-                    F.sum("__n").alias("events"),
-                    F.sum(F.when(~kd_ok, F.col("__n"))).alias("dlq_rows"),
-                    F.sum("__ins").alias("op_insert"),
-                    F.sum("__upd").alias("op_update"),
-                    F.sum("__del").alias("op_delete"),
-                    F.collect_set(F.when(kd_ok, bucket)).alias("buckets"),
-                    F.max(F.when(kd_ok, F.col("__n"))).alias("max_key_events"),
-                    # the keys above the salting floor — hottest first, top
-                    # 64 (a batch with more hot keys than that is uniform
-                    # enough that AQE handles the rest)
-                    F.slice(
-                        F.sort_array(F.collect_list(hot_struct), asc=False),
-                        1, 64,
-                    ).alias("hot_keys"),
-                ).first()
-                salt = self._resolve_auto_salt(
-                    int(row["events"] or 0), int(row["max_key_events"] or 0)
-                )
-                hot_keys = [
-                    tuple(r[k] for k in self.cfg.keys) for r in row["hot_keys"]
-                ] if salt else None
-            else:
-                row = kd.agg(
-                    F.count(F.lit(1)).alias("events"),
-                    F.count(F.when(~kd_ok, F.lit(1))).alias("dlq_rows"),
-                    F.count(F.when(op == "insert", F.lit(1))).alias("op_insert"),
-                    F.count(F.when(op == "update", F.lit(1))).alias("op_update"),
-                    F.count(F.when(op == "delete", F.lit(1))).alias("op_delete"),
-                    F.collect_set(F.when(kd_ok, bucket)).alias("buckets"),
-                ).first()
-            touched = sorted(b for b in row["buckets"] if b is not None)
-            observed = {
-                k: int(row[k] or 0)
-                for k in ("events", "dlq_rows", "op_insert", "op_update", "op_delete")
-            }
-        else:
+        obs = None
+        if touched is None:
             # persist-path metrics: an Observation on the decoded batch —
             # delivered by the materializing collect inside merge().
             # count(), not sum(): over an empty batch sum() yields a NULL
             # metric row that PythonSQLUtils.toPyRow refuses to convert.
+            op = F.col("op")
             self._obs_n = getattr(self, "_obs_n", 0) + 1
             obs = Observation(f"dlq-{batch_id}-{self._obs_n}")
             decoded = decoded.observe(
@@ -508,7 +492,7 @@ class CDCPipeline:
         merge_metrics = self.table.merge(net, batch_id=batch_id, touched=touched)
         merge_metrics["hint_sec"] = round(t_merge - t_hint, 3)
         merge_metrics["merge_sec"] = round(time.time() - t_merge, 3)
-        if not observed and touched is None:
+        if obs is not None:
             try:
                 observed = {k: int(v or 0) for k, v in obs.get.items()}
             except Exception:  # noqa: BLE001 — observation row absent (empty plan)
@@ -529,6 +513,77 @@ class CDCPipeline:
             **({"salt_chunks": salt} if salt else {}),
             **merge_metrics,
         }
+
+    def _prescan(self, batch: DataFrame, auto_salt: bool):
+        """The keys-only prescan's one-row aggregation over the raw batch.
+
+        Returns events, DLQ rows, the op histogram and the touched buckets;
+        with ``discover_columns`` also the image key names (``image_keys``);
+        with auto-salt also the skew measurement (``max_key_events``,
+        ``hot_keys``).
+        """
+        discover = self.cfg.discover_columns
+        op = F.col("op")
+        key_cols = {k: self._image_columns[k] for k in self.cfg.keys}
+        kd = compile_direct_decoder(
+            batch.select("op", "keys_json", *(["image"] if discover else [])),
+            "keys_json",
+            key_cols,
+        )
+        kd_ok = None
+        for k in self.cfg.keys:
+            cond = F.col(k).isNotNull()
+            kd_ok = cond if kd_ok is None else (kd_ok & cond)
+        bucket = self.table.bucket_of(*[F.col(k) for k in self.cfg.keys])
+        if not auto_salt:
+            return kd.agg(
+                F.count(F.lit(1)).alias("events"),
+                F.count(F.when(~kd_ok, F.lit(1))).alias("dlq_rows"),
+                F.count(F.when(op == "insert", F.lit(1))).alias("op_insert"),
+                F.count(F.when(op == "update", F.lit(1))).alias("op_update"),
+                F.count(F.when(op == "delete", F.lit(1))).alias("op_delete"),
+                F.collect_set(F.when(kd_ok, bucket)).alias("buckets"),
+                *([_key_names(F.json_object_keys("image")).alias("image_keys")]
+                  if discover else []),
+            ).first()
+        # two-level form of the same aggregation: the per-key stage
+        # shuffles one narrow (keys, counts, names) row per distinct key
+        # (map-side combined), and the global stage adds max(count) — the
+        # skew measurement the auto decision needs.  kd_ok / bucket depend
+        # only on key columns, so they evaluate on the per-key rows.
+        per_key = kd.groupBy(*self.cfg.keys).agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.count(F.when(op == "insert", F.lit(1))).alias("__ins"),
+            F.count(F.when(op == "update", F.lit(1))).alias("__upd"),
+            F.count(F.when(op == "delete", F.lit(1))).alias("__del"),
+            *([_key_names(F.json_object_keys("image")).alias("__names")]
+              if discover else []),
+        )
+        hot_struct = F.when(
+            kd_ok & (F.col("__n") > int(self.cfg.auto_salt_floor)),
+            F.struct(
+                F.col("__n").alias("n"),
+                *[F.col(k) for k in self.cfg.keys],
+            ),
+        )
+        return per_key.agg(
+            F.sum("__n").alias("events"),
+            F.sum(F.when(~kd_ok, F.col("__n"))).alias("dlq_rows"),
+            F.sum("__ins").alias("op_insert"),
+            F.sum("__upd").alias("op_update"),
+            F.sum("__del").alias("op_delete"),
+            F.collect_set(F.when(kd_ok, bucket)).alias("buckets"),
+            F.max(F.when(kd_ok, F.col("__n"))).alias("max_key_events"),
+            # the keys above the salting floor — hottest first, top
+            # 64 (a batch with more hot keys than that is uniform
+            # enough that AQE handles the rest)
+            F.slice(
+                F.sort_array(F.collect_list(hot_struct), asc=False),
+                1, 64,
+            ).alias("hot_keys"),
+            *([_key_names(F.col("__names")).alias("image_keys")]
+              if discover else []),
+        ).first()
 
     def _resolve_auto_salt(self, events: int, max_key_events: int) -> int | None:
         """Engage the two-phase fold only under measured skew.

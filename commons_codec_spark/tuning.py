@@ -31,6 +31,22 @@ def workdir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
+def lifecycle_touched_hint() -> bool | str:
+    """Touched-bucket hint mode for the lifecycle queries' CDC batches.
+
+    These workloads batch thousands of well-mixed keys into 8-bucket
+    tables, so every batch touches every bucket by construction and the
+    keys-only prescan is a whole extra job per batch just to learn "all
+    of them" — ``touched_hint="all"`` makes the merge the batch's ONE job
+    (see PipelineConfig).  ``SPARK_GRAFT_STREAM_HINT_ALL=0`` restores the
+    exact prescan (A/B lever).  Production pipelines with large bucket
+    counts and small batches keep the default exact prescan.
+    """
+    if os.environ.get("SPARK_GRAFT_STREAM_HINT_ALL", "1") == "0":
+        return True
+    return "all"
+
+
 class shuffle_partitions:
     """Temporarily right-size ``spark.sql.shuffle.partitions`` for a
     micro-batch-scale streaming job.  Streaming disables AQE, so a

@@ -153,15 +153,19 @@ def test_doomed_segment_keeps_discovery_and_dlq(spark, tmp_path):
     assert spark.read.parquet(dlq).count() == 1  # the poison row persisted
 
 
-def test_create_table_column_types_drive_reparse(spark, tmp_path):
+@pytest.mark.parametrize("touched_hint", [True, "all"])
+def test_create_table_column_types_drive_reparse(spark, tmp_path, touched_hint):
     """A create-table control event carrying MAP annotations makes the
-    pipeline re-parse the JSON-in-string column for subsequent data (D8)."""
+    pipeline re-parse the JSON-in-string column for subsequent data (D8).
+    Under the all-buckets hint too: the empty pre-DDL segment must not bake
+    its string-typed decode of ``props`` into the commit."""
     table = _table(spark, tmp_path)
     cfg = PipelineConfig(
         keys=["k"],
         image_columns={"k": "S", "props": "S"},
         handle_control=True,
         json_schemas={"props": "struct<a:long, b:string>"},
+        touched_hint=touched_hint,
     )
     pipe = CDCPipeline(spark, table, cfg)
     props_json = '{\\"a\\": 7, \\"b\\": \\"x\\"}'

@@ -17,6 +17,7 @@ from commons_codec_spark.operators.cdc_fold import SET, fold_net_changes
 from commons_codec_spark.oracle import replay_oracle, state_hash
 from commons_codec_spark.sources.eventlog import (
     SOURCE_CODE_COLUMNS,
+    SOURCE_CODE_COLUMNS_V0,
     generate_event_log,
 )
 from commons_codec_spark.streaming.pipeline import CDCPipeline, PipelineConfig
@@ -400,12 +401,14 @@ def test_auto_salt_engages_under_skew_only(spark, tmp_path):
         spark, str(tmp_path / "tbl2"),
         key_schema={"repo": "string", "path": "string"}, n_buckets=8,
     )
+    # pre-`lang` schema: discovery rides on the two-level prescan here
     pipe2 = CDCPipeline(spark, table2, PipelineConfig(
-        keys=KEYS, image_columns=SOURCE_CODE_COLUMNS,
+        keys=KEYS, image_columns=SOURCE_CODE_COLUMNS_V0,
         salt_chunks="auto", auto_salt_floor=500,
     ))
     m2 = pipe2.run_replay(uni_log)
     assert "salt_chunks" not in m2[0]
+    assert "lang" in pipe2._image_columns
     _assert_state_matches(table2, _oracle_state(uni_log.collect()))
 
 

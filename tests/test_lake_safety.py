@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from commons_codec_spark.lake.table import KeyedLakeTable
+from commons_codec_spark.operators.cdc_fold import fold_net_changes
 from commons_codec_spark.streaming.pipeline import CDCPipeline, PipelineConfig
 
 
@@ -52,6 +53,7 @@ def test_wrong_touched_hint_raises_instead_of_dropping(spark, tmp_path):
     # a correct (superset) hint succeeds
     m = table.merge(net, batch_id=1, touched=all_buckets + [99 % table.n_buckets])
     assert not m["skipped"]
+    assert m["rows_written"] == 20
     assert table.read().count() == 20
 
 
@@ -61,6 +63,21 @@ def test_empty_touched_hint_falls_back_to_discovery(spark, tmp_path):
     m = table.merge(net, batch_id=1, touched=[])
     assert not m["skipped"] and m["touched_buckets"] >= 1
     assert table.read().count() == 2
+
+
+def test_merge_with_empty_result_writes_zero_rows(spark, tmp_path):
+    """Updates of keys the table never held change nothing: the merge
+    writes no bucket, and AQE drops its rows_written Observation with the
+    empty plan, so the count comes from the files instead of failing."""
+    table = _table(spark, tmp_path)
+    df = spark.createDataFrame(
+        [("update", "a", 1, 1), ("update", "b", 2, 2)],
+        "op string, k string, v long, commit_seq long",
+    )
+    m = table.merge(fold_net_changes(df, ["k"], ["v"]), batch_id=1)
+    assert not m["skipped"] and m["rows_written"] == 0
+    assert table.read().count() == 0
+    assert 1 in table.applied_batch_ids()
 
 
 def test_compact_tombstones_drops_only_stale(spark, tmp_path):
@@ -137,7 +154,7 @@ def test_keyed_lake_table_satisfies_sink_seam(spark, tmp_path):
     from commons_codec_spark.lake.interface import LakeSink
     from commons_codec_spark.lake.table import KeyedLakeTable
 
-    t = KeyedLakeTable.create(
+    t =KeyedLakeTable.create(
         spark, str(tmp_path / "seam"), key_schema={"k": "string"}, n_buckets=2
     )
     assert isinstance(t, LakeSink)

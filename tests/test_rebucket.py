@@ -10,6 +10,10 @@ merges (touched-bucket hints included) must target the NEW layout.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 from commons_codec_spark.lake.table import KeyedLakeTable
 from commons_codec_spark.operators.cdc_fold import fold_net_changes
 from commons_codec_spark.sources.eventlog import (
@@ -62,12 +66,12 @@ def test_rebucket_preserves_state_and_replay_continues(spark, tmp_path):
     assert all(0 <= int(b) < 16 for b in commit["buckets"])
     # >4 distinct bucket ids proves the data actually moved to the new hash
     assert len(commit["buckets"]) > 4
+    # one core wave of write tasks, still exactly one file per bucket dir
+    for path in commit["buckets"].values():
+        assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1, path
 
     # a fresh instance (new process) sees the committed layout even if
     # _meta.json is stale (crash between commit and meta rewrite)
-    import json
-    import os
-
     meta_path = os.path.join(str(tmp_path / "t"), "_meta.json")
     with open(meta_path) as fh:
         meta = json.load(fh)
